@@ -325,6 +325,25 @@ def test_publish_bak_restored_after_crash_window(fba_runner, tmp_path):
     assert os.path.exists(path)
 
 
+def test_publish_bak_restored_into_empty_store_dir(fba_runner, tmp_path):
+    """An EMPTY store dir beside the .bak (the dir recreated before the
+    crash, or by a tool) must not swallow the backup: a rename onto an
+    existing dir would move the .bak INSIDE it, nesting the store."""
+    import shutil
+
+    path = str(tmp_path / "bak_empty.parquet")
+    h = fba_runner.harvester(path)
+    h.harvest_combos({"a": [1, 2], "b": [10]})
+    expected = sorted(map(tuple, h.load_full_df().collect()))
+    shutil.move(path, path + ".bak")
+    os.mkdir(path)
+    assert sorted(map(tuple, h.load_full_df().collect())) == expected
+    assert not os.path.exists(path + ".bak")
+    children = os.listdir(path)
+    assert "bak_empty.parquet.bak" not in children
+    assert any(n.endswith(".parquet") for n in children)
+
+
 def test_to_xarray_attrs_roundtrip(spark, tmp_path, monkeypatch):
     """Runner constants + attrs written to the _attrs.json sidecar on
     harvest must surface as Dataset.attrs in Harvester.to_xarray

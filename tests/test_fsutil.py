@@ -201,3 +201,92 @@ def test_fs_handle_cache_per_scheme(spark, myfs):
     assert fsutil._fs_cache_key("file:/x") == ("file", "")
     cache = spark._xyzpy_fs_cache
     assert ("viewfs", "test") in cache and ("", "") in cache
+
+
+def test_fs_cache_key_every_scheme_prefix_own_slot():
+    """Single-slash scheme URIs (``hdfs:/x``) must not share the
+    default-FS slot: once a plain path filled it, they would get the
+    wrong cached FileSystem ('Wrong FS')."""
+    key = fsutil._fs_cache_key
+    assert key("hdfs:/x") == ("hdfs", "")
+    assert key("s3a:/bucket/k") == ("s3a", "")
+    assert key("hdfs://nn:8020/x") == ("hdfs", "nn:8020")
+    assert key("file:///x") == ("file", "")
+    assert key("viewfs://test/a") == ("viewfs", "test")
+    assert key("x-y.z+w:/p") == ("x-y.z+w", "")
+    # scheme-less: plain, relative, a colon after a slash, no scheme
+    for p in ("/x/y", "rel/a:b", "./c:d", ":x", "1a:/x", ""):
+        assert key(p) == ("", ""), p
+    assert len({key(p) for p in ("hdfs:/x", "s3a:/x", "/x", "file:/x")}) == 4
+
+
+class _JExc:
+    """A stand-in for a py4j ``JavaObject`` Throwable."""
+
+    def __init__(self, cls, cause=None):
+        self._cls, self._cause = cls, cause
+
+    def getClass(self):
+        return self
+
+    def getName(self):
+        return self._cls
+
+    def getCause(self):
+        return self._cause
+
+
+class _JavaError(Exception):
+    def __init__(self, msg, jexc):
+        super().__init__(msg)
+        self.java_exception = jexc
+
+
+def _stub_fs(monkeypatch, exc):
+    class _FS:
+        def open(self, p):
+            raise exc
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", lambda spark, path: (_FS(), path))
+
+
+def test_read_text_or_none_matches_exception_class(monkeypatch):
+    """Missing-file detection goes by the Java exception class along
+    the getCause() chain, not by the message text: an IOException whose
+    message (or stack trace) mentions FileNotFoundException propagates."""
+    err = _JavaError(
+        "java.io.IOException: lease lost; caused by "
+        "java.io.FileNotFoundException in a retry",
+        _JExc("java.io.IOException", _JExc("java.lang.IllegalStateException")),
+    )
+    _stub_fs(monkeypatch, err)
+    with pytest.raises(_JavaError, match="lease lost"):
+        fsutil.read_text_or_none(None, "/x.json")
+    _stub_fs(monkeypatch, _JavaError("x", _JExc("java.io.FileNotFoundException")))
+    assert fsutil.read_text_or_none(None, "/x.json") is None
+    wrapped = _JExc(
+        "java.io.UncheckedIOException", _JExc("java.io.FileNotFoundException")
+    )
+    _stub_fs(monkeypatch, _JavaError("x", wrapped))
+    assert fsutil.read_text_or_none(None, "/x.json") is None
+    # a Python-side failure (no Java exception at all) propagates
+    _stub_fs(monkeypatch, RuntimeError("FileNotFoundException"))
+    with pytest.raises(RuntimeError):
+        fsutil.read_text_or_none(None, "/x.json")
+
+
+def test_read_text_or_none_real_java_exceptions(spark, monkeypatch):
+    """The same contract on real JVM exception objects: a non-FNF
+    IOException mentioning FileNotFoundException (message and cause)
+    propagates; a genuine FileNotFoundException reads as None."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    cause = jvm.java.io.IOException("java.io.FileNotFoundException: /x")
+    jexc = jvm.java.io.IOException("FileNotFoundException mentioned", cause)
+    _stub_fs(monkeypatch, Py4JJavaError("calling o1.open", jexc))
+    with pytest.raises(Py4JJavaError):
+        fsutil.read_text_or_none(spark, "/x.json")
+    fnf = jvm.java.io.FileNotFoundException("/x.json")
+    _stub_fs(monkeypatch, Py4JJavaError("calling o1.open", fnf))
+    assert fsutil.read_text_or_none(spark, "/x.json") is None

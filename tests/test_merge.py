@@ -101,3 +101,41 @@ def test_merge_nan_counts_as_missing(spark):
         assert rows[1] == 7.0, ow   # value beats old NaN
         assert rows[2] == 5.0, ow   # value beats new NaN
         assert rows[3] is None, ow  # both missing -> canonical null
+
+
+def test_merge_quoted_and_backticked_names(spark):
+    """Variable and dim names holding a quote and a backtick survive
+    the SQL-fragment rendering: the conflict text names them exactly,
+    and every policy (plus NaN-as-missing) behaves as for plain names."""
+    v, d = "it's `v`", "d`'im"
+    old = spark.createDataFrame(
+        [(1, 10.0), (2, float("nan")), (3, 5.0)], [d, v]
+    )
+    new = spark.createDataFrame(
+        [(1, 99.0), (2, 7.0), (4, 8.0)], [d, v]
+    )
+    out = merge_datasets(old, new, [d])
+    assert out.columns == [d, v]
+    with pytest.raises(Exception) as ei:
+        out.collect()
+    assert f"MERGE CONFLICT in variable '{v}' at {d}=1" in str(ei.value)
+    assert count_conflicts(old, new, [d]) == 1
+    expect = {
+        True: {1: 99.0, 2: 7.0, 3: 5.0, 4: 8.0},
+        False: {1: 10.0, 2: 7.0, 3: 5.0, 4: 8.0},
+    }
+    for ow, rows in expect.items():
+        got = merge_datasets(old, new, [d], overwrite=ow).collect()
+        assert {r[d]: r[v] for r in got} == rows, ow
+    # no conflict once the clashing cell is gone: NaN never conflicts
+    ok = merge_datasets(old.where(f"`{d.replace('`', '``')}` != 1"), new, [d])
+    assert {r[d]: r[v] for r in ok.collect()} == {1: 99.0, 2: 7.0, 3: 5.0, 4: 8.0}
+
+
+def test_merge_conflict_message_multi_dim(spark):
+    """The raise names every dim, in order, with its cast value."""
+    old = spark.createDataFrame([(1, "x", 0.5, 1.0)], ["a", "b", "c", "y"])
+    new = spark.createDataFrame([(1, "x", 0.5, 2.0)], ["a", "b", "c", "y"])
+    with pytest.raises(Exception) as ei:
+        merge_datasets(old, new, ["a", "b", "c"]).collect()
+    assert "MERGE CONFLICT in variable 'y' at a=1, b=x, c=0.5" in str(ei.value)

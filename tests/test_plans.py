@@ -6,6 +6,7 @@ grid builds, filter pushdown + column pruning reaching the parquet
 scans, broadcast joins for small dimension tables.
 """
 
+import contextlib
 import os
 
 import pytest
@@ -1160,3 +1161,94 @@ def test_dedup_clusters_plan_stays_bounded(spark):
     plan = executed_plan(out)
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
     assert len(plan) < 20_000, len(plan)
+
+
+@contextlib.contextmanager
+def _py4j_round_trips(spark):
+    """Count driver->JVM py4j round trips made inside the block, by
+    wrapping the gateway client's ``send_command`` (py4j's asynchronous
+    proxy releases, ``m\\n`` commands from its finalizer, excluded)."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    count = [0]
+
+    def send_command(command, *a, **kw):
+        if not command.startswith("m\n"):
+            count[0] += 1
+        return orig(command, *a, **kw)
+
+    client.send_command = send_command
+    try:
+        yield count
+    finally:
+        del client.send_command
+
+
+def test_sweep_builders_constant_py4j_round_trips(spark):
+    """The sweep lifecycle's plan builders render SQL fragments, so
+    their driver cost does not grow with coordinate values or
+    variables: a 1000-value axis, or a 20-variable merge, costs a few
+    dozen py4j round trips (the per-value / per-variable Column
+    builders cost ~21 per value and ~370 per variable)."""
+    from xyzpy_spark.merge import count_conflicts, merge_datasets
+    from xyzpy_spark.missing import non_null_points
+
+    with _py4j_round_trips(spark) as n:
+        combo_grid(spark, {"x": [i * 0.5 for i in range(1000)]})
+    assert n[0] < 100, n[0]
+    with _py4j_round_trips(spark) as n:
+        combo_grid(spark, {"s": [f"v{i}'`" for i in range(1000)],
+                           "i": list(range(1000))})
+    assert n[0] < 100, n[0]
+
+    vs = [f"v{i}" for i in range(20)]
+    old = spark.range(4).selectExpr("id AS a", *[f"id * 0.5 AS {v}" for v in vs])
+    new = spark.range(2, 6).selectExpr("id AS a", *[f"id * 0.5 AS {v}" for v in vs])
+    for ow in (None, True, False):
+        with _py4j_round_trips(spark) as n:
+            merge_datasets(old, new, ["a"], overwrite=ow)
+        assert n[0] < 100, (ow, n[0])
+    with _py4j_round_trips(spark) as n:
+        count_conflicts(old, new, ["a"])
+    assert n[0] < 100, n[0]
+    with _py4j_round_trips(spark) as n:
+        non_null_points(old, ["a"], vs)
+    assert n[0] < 100, n[0]
+
+
+def test_harvester_topup_store_scan_literal_partition_filters(
+    spark, tmp_path, monkeypatch
+):
+    """A partitioned Harvester top-up reads the store through the
+    touched-coordinate predicate, now one SQL fragment: the scan must
+    still carry LITERAL PartitionFilters on the partition dims (the
+    O(touched) top-up), for one and for two partition dims."""
+    import re as _re
+
+    from conftest import foo2_scalar
+    from xyzpy_spark import farming
+    from xyzpy_spark.farming import Harvester, Runner
+
+    seen = []
+    real = farming.merge_datasets
+
+    def spy(old, new, dims, **kw):
+        seen.append(old)
+        return real(old, new, dims, **kw)
+
+    monkeypatch.setattr(farming, "merge_datasets", spy)
+    r = Runner(foo2_scalar, var_names=["s"], spark=spark)
+    for pby in ("a", ["a", "b"]):
+        seen.clear()
+        h = Harvester(r, str(tmp_path / f"p{len(pby)}.parquet"),
+                      partition_by=pby)
+        h.harvest_combos({"a": [1, 2], "b": [10, 20]})
+        h.harvest_combos({"a": [1, 2, 3], "b": [10, 20, 30]},
+                         missing_only=True)
+        assert len(seen) == 1
+        plan = executed_plan(seen[0])
+        pf = _re.search(r"PartitionFilters: \[([^\]]*)", plan)
+        assert pf, plan[:3000]
+        for d in pby:
+            assert _re.search(rf"\({d}#\d+L? = \d+\)", pf.group(1)), plan
+        assert h.full_df.count() == 9

@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import fsutil
+from ._sql import sql_chain, sql_ident, sql_literal
 from .grid import LOC_COL
 from .merge import merge_datasets
 from .missing import non_null_points
@@ -254,6 +255,35 @@ def _write_layout(spark, dirpath: str, partition_by, schema) -> None:
     )
 
 
+def _touched_predicate(pby, touched, schema) -> Column:
+    """OR-of-ANDs over literals: every conjunct compares a partition
+    column to a constant, so the store scan partition-prunes to exactly
+    the touched dirs.  Rendered as ONE SQL predicate (bracketed
+    left-deep, the tree the Column-API ``reduce`` built); coordinates
+    with no exact SQL literal (timestamps, int32 columns) take the
+    Column builder."""
+    types = [schema[d].dataType for d in pby]
+    try:
+        return F.expr(sql_chain("OR", (
+            sql_chain("AND", (
+                f"({sql_ident(d)} = {sql_literal(v, dt)})"
+                for d, v, dt in zip(pby, t, types)
+            ))
+            for t in touched
+        )))
+    except TypeError:
+        return functools.reduce(
+            Column.__or__,
+            (
+                functools.reduce(
+                    Column.__and__,
+                    (F.col(d) == F.lit(v) for d, v in zip(pby, t)),
+                )
+                for t in touched
+            ),
+        )
+
+
 def _read_layout(spark, path: str) -> dict | None:
     txt = fsutil.read_text_or_none(
         spark, fsutil.join(path, "_layout.json")
@@ -389,7 +419,10 @@ class Harvester:
             if fsutil.exists(self.spark, bak):
                 # a crash between _publish_parquet's two renames leaves
                 # only the .bak — restore it instead of silently
-                # starting an empty store
+                # starting an empty store.  An EMPTY store dir must go
+                # first: a rename onto an existing dir moves the .bak
+                # inside it, nesting the backup
+                fsutil.delete(self.spark, self.data_name)
                 fsutil.rename(self.spark, bak, self.data_name)
                 children = fsutil.listdir(self.spark, self.data_name)
             if not children:
@@ -543,19 +576,7 @@ class Harvester:
                         "through the dim=value layout; use an "
                         "unpartitioned store for nullable dims"
                     )
-                # OR-of-ANDs over literals: every conjunct compares a
-                # partition column to a constant, so the store scan
-                # partition-prunes to exactly the touched dirs
-                touched_cond = functools.reduce(
-                    Column.__or__,
-                    (
-                        functools.reduce(
-                            Column.__and__,
-                            (F.col(d) == F.lit(v) for d, v in zip(pby, t)),
-                        )
-                        for t in touched
-                    ),
-                )
+                touched_cond = _touched_predicate(pby, touched, new.schema)
             if old is None:
                 merged = new
             elif pby is not None:

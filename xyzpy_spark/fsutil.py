@@ -43,6 +43,7 @@ Semantics notes
 from __future__ import annotations
 
 import posixpath
+import re
 
 __all__ = [
     "hadoop_fs",
@@ -65,6 +66,9 @@ __all__ = [
 ]
 
 
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*")
+
+
 def jpath(spark, path: str):
     """A JVM ``org.apache.hadoop.fs.Path`` for ``path``."""
     return spark._jvm.org.apache.hadoop.fs.Path(path)
@@ -73,13 +77,17 @@ def jpath(spark, path: str):
 def _fs_cache_key(path: str) -> tuple[str, str]:
     """(scheme, authority) parsed PYTHON-side — no JVM round trip.
     Scheme-less paths all resolve through the session's default
-    filesystem, so they share one cache slot."""
-    if "://" in path:
-        scheme, _, rest = path.partition("://")
-        return scheme, rest.split("/", 1)[0]
-    if path.startswith("file:"):
-        return "file", ""
-    return "", ""
+    filesystem, so they share one cache slot; every ``scheme:`` prefix
+    (``hdfs:/x`` and ``s3a:/x`` included, not only ``scheme://``) gets
+    its own.  The scheme is parsed as ``java.net.URI`` does: a letter,
+    then letters, digits, ``+``, ``-`` or ``.``, before the first
+    ``:`` that precedes any ``/``."""
+    scheme, sep, rest = path.partition(":")
+    if not sep or not _SCHEME.fullmatch(scheme):
+        return "", ""
+    if rest.startswith("//"):
+        return scheme, rest[2:].split("/", 1)[0]
+    return scheme, ""
 
 
 def hadoop_fs(spark, path: str):
@@ -239,6 +247,20 @@ def read_text(spark, path: str, encoding: str = "utf-8") -> str:
     return read_bytes(spark, path).decode(encoding)
 
 
+def _is_file_not_found(jexc) -> bool:
+    """Whether a Java exception, or one in its ``getCause()`` chain, IS
+    a ``java.io.FileNotFoundException`` — by class, never by searching
+    the message text: an IO failure whose message merely mentions a
+    missing file must propagate."""
+    for _ in range(16):  # cause chains can be cyclic; bound the walk
+        if jexc is None:
+            return False
+        if jexc.getClass().getName() == "java.io.FileNotFoundException":
+            return True
+        jexc = jexc.getCause()
+    return False
+
+
 def read_text_or_none(spark, path: str, encoding: str = "utf-8"):
     """``read_text`` that returns ``None`` for a missing file in ONE
     filesystem operation (r14): the sidecar-read idiom was
@@ -250,9 +272,7 @@ def read_text_or_none(spark, path: str, encoding: str = "utf-8"):
     try:
         stream = fs.open(p)
     except Exception as exc:  # py4j wraps java.io.FileNotFoundException
-        if "FileNotFoundException" in str(
-            getattr(exc, "java_exception", exc.__class__.__name__)
-        ) or "FileNotFoundException" in str(exc):
+        if _is_file_not_found(getattr(exc, "java_exception", None)):
             return None
         raise
     try:

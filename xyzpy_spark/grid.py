@@ -17,6 +17,19 @@ rely on row order; always carry explicit keys).
 Values are looked up either via ``element_at`` on an array *literal*
 (primitive coords — stays entirely in whole-stage codegen) or via a
 broadcast join against a tiny index->value table (arbitrary coords).
+
+The array literals are rendered driver-side as SQL text
+(:func:`~xyzpy_spark._sql.sql_literal`) and every axis lands in one
+projection (:func:`~xyzpy_spark._sql.select_sql`): building the grid
+costs a constant number of py4j round trips, where a ``F.lit`` per
+coordinate value cost ~21 each.
+Exactness contract: long, double, boolean, string and date axes render
+to non-null literals equal to ``F.lit(v).cast(dtype)`` bit for bit
+(-0.0, subnormals, NaN, ±inf and the full long range included), so the
+grid's values, column types, nullability and optimized plan are those
+of the per-value builder.  Every other axis (timestamps, binary, mixed
+types) takes the lookup join, which keeps a single-typed axis's type
+and nullability.
 """
 
 from __future__ import annotations
@@ -26,6 +39,7 @@ from operator import mul
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ._sql import select_sql, sql_ident, sql_literal
 from ._types import infer_values_type
 from .prepare import check_combo_case_disjoint, parse_cases, parse_combos
 
@@ -48,29 +62,46 @@ def _strides(combos: tuple[tuple[str, tuple], ...]) -> list[int]:
 
 
 def _attach_combo_columns(df: DataFrame, combos, idx_col) -> DataFrame:
-    """Derive one column per combo arg from the linear index column."""
+    """Derive one column per combo arg from the linear index column.
+
+    Every literal-renderable axis is one ``element_at`` over one SQL
+    array literal, and all axes go into ONE projection, so the
+    build costs a constant number of py4j round trips however many
+    coordinate values or axes there are."""
     spark = df.sparkSession
-    strides = _strides(combos)
-    for (arg, values), stride in zip(combos, strides):
-        n = len(values)
+    exprs, lookups = ["*"], []
+    for (arg, values), stride in zip(combos, _strides(combos)):
         # integer `div`, NOT `/`: float division round-trips through
         # double and corrupts locs beyond 2^53 — grids that large are
         # exactly what the range-based builder exists for.
-        vidx = F.expr(f"(`{idx_col}` div {stride}) % {n}")
+        vidx = f"({sql_ident(idx_col)} div {stride}) % {len(values)}"
         try:
             dtype = infer_values_type(values)
-            arr = F.array(*[F.lit(v).cast(dtype) for v in values])
-            df = df.withColumn(arg, F.element_at(arr, (vidx + 1).cast("int")))
         except TypeError:
-            # arbitrary / mixed values: broadcast-join a tiny lookup.
-            lookup = spark.createDataFrame(
-                [(i, v) for i, v in enumerate(values)], [f"__{arg}_idx", arg]
-            )
-            df = (
-                df.withColumn(f"__{arg}_idx", vidx)
-                .join(F.broadcast(lookup), f"__{arg}_idx")
-                .drop(f"__{arg}_idx")
-            )
+            dtype = None
+        try:
+            arr = ", ".join(sql_literal(v, dtype) for v in values)
+        except TypeError:
+            lookups.append((arg, values, dtype))
+            exprs.append(f"{vidx} AS {sql_ident(f'__{arg}_idx')}")
+            continue
+        exprs.append(
+            f"element_at(array({arr}), CAST({vidx} + 1 AS INT)) "
+            f"AS {sql_ident(arg)}"
+        )
+    df = select_sql(df, exprs)
+    for arg, values, dtype in lookups:
+        # arbitrary / mixed values: broadcast-join a tiny lookup.  A
+        # single-typed axis (timestamps, binary) keeps that type and
+        # the nullability an array literal would have given it.
+        schema = [f"__{arg}_idx", arg]
+        if dtype is not None:
+            schema = T.StructType([
+                T.StructField(schema[0], T.LongType(), False),
+                T.StructField(arg, dtype, any(v is None for v in values)),
+            ])
+        lookup = spark.createDataFrame(list(enumerate(values)), schema)
+        df = df.join(F.broadcast(lookup), f"__{arg}_idx").drop(f"__{arg}_idx")
     return df
 
 
